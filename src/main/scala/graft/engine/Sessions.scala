@@ -11,14 +11,34 @@ import org.apache.spark.sql.SparkSession
   *    (converted to TimestampType in [[Tables.events]]).
   *
   * The derived config maps ([[tuneConf]], [[clusterConf]]) are pure
-  * functions of the sizing inputs so the arithmetic is directly testable —
+  * functions of their inputs so the arithmetic is directly testable —
   * `ClusterTuningSpec` pins the maps without reflecting on Builder
-  * internals (ADVICE r7).
+  * internals (ADVICE r7). The `GRAFT_*` overrides are one of those
+  * inputs: the builders ([[tune]], [[forCluster]]) read the environment
+  * once ([[envOverrides]]) and pass it in, so no map depends on what
+  * the caller's shell exports.
   */
 object Sessions {
 
-  /** The semantics + AQE configs every entry point shares. */
-  def tuneConf(shufflePartitions: String): Map[String, String] = Map(
+  /** Environment variable → the config key it overrides, for A/B runs
+    * of the parallelism-sizing knobs without a rebuild.
+    */
+  val overridableByEnv: Map[String, String] = Map(
+    "GRAFT_AQE_PARALLELISM_FIRST" ->
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst",
+    "GRAFT_AQE_MIN_PARTITION_SIZE" ->
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize",
+    "GRAFT_SCAN_MIN_PARTITIONS" -> "spark.sql.files.minPartitionNum")
+
+  /** The config overrides `env` sets through [[overridableByEnv]]. */
+  def envOverrides(env: Map[String, String] = sys.env): Map[String, String] =
+    overridableByEnv.collect { case (v, k) if env.contains(v) => k -> env(v) }
+
+  /** The semantics + AQE configs every entry point shares, with
+    * `overrides` applied last.
+    */
+  def tuneConf(shufflePartitions: String,
+      overrides: Map[String, String] = Map.empty): Map[String, String] = Map(
     "spark.sql.extensions" -> "graft.GraftExtensions",
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.shuffle.partitions" -> shufflePartitions,
@@ -26,9 +46,10 @@ object Sessions {
     "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
     // PARALLELISM-SIZING KNOBS (r21; guide §2.2/§2.6 — the r20 driver
     // measured the full suite FASTER at 8 cores than 32 because every
-    // stage's task count is core-derived). Both are env-parameterized so
-    // the A/B is a rerun, not a rebuild; defaults are the MEASURED
-    // winners at bench SF (see OPTIMIZATION_r21.md):
+    // stage's task count is core-derived). All three are overridable
+    // from the environment ([[overridableByEnv]]) so the A/B is a rerun,
+    // not a rebuild; defaults are the MEASURED winners at bench SF (see
+    // OPTIMIZATION_r21.md):
     //  - parallelismFirst stays TRUE (Spark's default): the pure
     //    byte-derived alternative (false + 64 MB advisory) collapses
     //    compute-heavy small-byte stages — wedge explodes, shingle
@@ -47,12 +68,9 @@ object Sessions {
     //    to total cores: on a fleet, a small input should still engage
     //    every executor, and at 100 TB the byte-derived split count
     //    (bytes / maxPartitionBytes) dwarfs any floor either way.
-    "spark.sql.adaptive.coalescePartitions.parallelismFirst" ->
-      sys.env.getOrElse("GRAFT_AQE_PARALLELISM_FIRST", "true"),
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize" ->
-      sys.env.getOrElse("GRAFT_AQE_MIN_PARTITION_SIZE", "1m"),
-    "spark.sql.files.minPartitionNum" ->
-      sys.env.getOrElse("GRAFT_SCAN_MIN_PARTITIONS", "8"),
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "true",
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1m",
+    "spark.sql.files.minPartitionNum" -> "8",
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     // fixtures store timestamp[us] with isAdjustedToUTC=false; Spark 4
     // would infer TIMESTAMP_NTZ, which (a) rejects unix_micros and (b)
@@ -65,13 +83,13 @@ object Sessions {
     // write int64 micros, not INT96: the oracle compare reads our output
     // and DuckDB's result side-by-side and INT96 decodes as nanos
     "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
-    "spark.ui.enabled" -> "false")
+    "spark.ui.enabled" -> "false") ++ overrides
 
   private def applyConf(b: SparkSession.Builder, conf: Map[String, String]): SparkSession.Builder =
     conf.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
 
   def tune(b: SparkSession.Builder, cores: String): SparkSession.Builder =
-    applyConf(b, tuneConf(cores))
+    applyConf(b, tuneConf(cores, envOverrides()))
 
   def local(appName: String, cores: Int = 4): SparkSession = {
     val s = tune(SparkSession.builder().master(s"local[$cores]").appName(appName), cores.toString)
@@ -101,13 +119,15 @@ object Sessions {
     *
     * The returned map carries the same semantics configs as [[tuneConf]]
     * (UTC, AQE, nanos flag, micros parquet) so cluster runs and the local
-    * harness agree bit-for-bit.
+    * harness agree bit-for-bit; `overrides` apply last, over the cluster
+    * sizing too.
     */
   def clusterConf(
       executors: Int,
       coresPerExecutor: Int = 4,
       executorMemGb: Int = 8,
-      inputTb: Double = 0.0): Map[String, String] = {
+      inputTb: Double = 0.0,
+      overrides: Map[String, String] = Map.empty): Map[String, String] = {
     val totalCores = executors * coresPerExecutor
     val byCores = 2L * totalCores
     val byVolume = math.ceil(inputTb * 1e12 / (200L << 20).toDouble).toLong
@@ -122,7 +142,7 @@ object Sessions {
       // scan-split floor returns to total cores on a fleet (see the
       // [[tuneConf]] comment): small inputs should still engage every
       // executor; at volume the byte-derived count dominates anyway
-      "spark.sql.files.minPartitionNum" -> totalCores.toString)
+      "spark.sql.files.minPartitionNum" -> totalCores.toString) ++ overrides
   }
 
   def forCluster(
@@ -131,7 +151,8 @@ object Sessions {
       coresPerExecutor: Int = 4,
       executorMemGb: Int = 8,
       inputTb: Double = 0.0): SparkSession.Builder =
-    applyConf(b, clusterConf(executors, coresPerExecutor, executorMemGb, inputTb))
+    applyConf(b, clusterConf(executors, coresPerExecutor, executorMemGb,
+      inputTb, envOverrides()))
 
   /** State-store sizing for the stateful streaming family — SCALE.md's
     * per-query state-bound arguments as testable arithmetic, the way

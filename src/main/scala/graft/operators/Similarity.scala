@@ -697,7 +697,7 @@ object Similarity extends QueryModule {
     * At 100 TB this materialization IS the written-by-cell assignment
     * index a production deployment maintains.
     */
-  private def knnAssigned(s: SparkSession, dir: String, assign: Int = knnAssign): DataFrame = {
+  private def knnAssigned(s: SparkSession, dir: String, assign: Int): DataFrame = {
     VectorFunctions.register(s)
     val cents = SimilarityIndex.centroids(s, dir, knnCells)
     val centCols = (0 until knnCells).map(c =>

@@ -116,7 +116,7 @@ object FkJoinElimination extends Rule[LogicalPlan] {
     }
     // the key must be the dim's ONLY surviving column
     if dim.output == Seq(pkAttr)
-    c <- ConstraintCatalog.forParent(dimPath, pkAttr.name)
+    _ <- ConstraintCatalog.forParent(dimPath, pkAttr.name)
       .find(c => c.childCol == fkAttr.name && originatesFrom(fact, fkAttr, c.childPath))
   } yield {
     val guarded =

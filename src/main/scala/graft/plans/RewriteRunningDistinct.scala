@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, CollectSet, Complete, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Window}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{IntegerType, LongType}
+import org.apache.spark.sql.types.IntegerType
 
 /** Optimizer rule: plan the natural "running COUNT DISTINCT" spelling
   * scalably.
@@ -78,7 +78,7 @@ object RewriteRunningDistinct extends Rule[LogicalPlan] {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case p @ Project(plist, w @ Window(wexprs, part, order, child, hint))
+    case p @ Project(plist, Window(wexprs, part, order, child, hint))
         if order.nonEmpty && wexprs.exists {
           case Alias(e, _) => isRunningCollectSet(e); case _ => false
         } =>

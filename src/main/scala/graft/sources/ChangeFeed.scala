@@ -216,7 +216,7 @@ object ChangeFeed {
     * projection is computed ONCE here, not per row.
     */
   private def render(snap: GraftStore.Committed, endPad: Array[Any],
-      target: StructType, endSnap: Option[GraftStore.Committed] = None)
+      target: StructType, endSnap: Option[GraftStore.Committed])
       : (Array[Any], String, Int) => Array[Any] = {
     val (proj, pad) = GraftStore.composeProjection(snap, target, endPad)
     // the slot fallback is only sound within ONE slot lineage: a
@@ -279,7 +279,7 @@ object ChangeFeed {
       cur: GraftStore.Committed, v: Int, target: StructType,
       endPad: Array[Any],
       changes: scala.collection.mutable.ArrayBuffer[Array[Any]],
-      endSnap: Option[GraftStore.Committed] = None): Unit = {
+      endSnap: Option[GraftStore.Committed]): Unit = {
     // composed slot projections hoisted once per diffed commit — the
     // per-row work is a plain array-indexed gather
     lazy val rPrev = render(prev, endPad, target, endSnap)

@@ -106,7 +106,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
   override def loadProcedure(ident: Identifier)
       : procedures.UnboundProcedure = {
     import org.apache.spark.sql.connector.catalog.procedures._
-    import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+    import org.apache.spark.sql.types.{IntegerType, StringType}
     require(ident.namespace.sameElements(Array("system")),
       s"graft catalog: unknown procedure ${ident.namespace.mkString(".")}.${ident.name}")
     if (ident.name == "compact") return compactProcedure
@@ -806,6 +806,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
               case _ => // drop_tag
                 val existed = GraftCatalog.tags.remove(tk).isDefined |
                   GraftCatalog.partTags.remove(tk).isDefined
+                GraftStore.sweepBlocks()
                 (new StructType()
                   .add("dropped", BooleanType, nullable = false),
                   Array[Any](existed))
@@ -2458,7 +2459,17 @@ object GraftCatalog {
           GraftStore.history.put(kk,
             hist.map(c => if (c != null && !pinned.contains(c)) null else c))
       }
+    GraftStore.sweepBlocks()
   }
+
+  /** Snapshots the catalog retains beyond the stores' own histories:
+    * partitioned ledger entries and tags (see [[GraftStore.sweepBlocks]]).
+    */
+  private[sources] def pinnedSnapshots: Iterator[GraftStore.Committed] =
+    partVersions.valuesIterator.flatMap(_.iterator.filter(_ != null))
+      .flatMap(_._2.valuesIterator) ++
+      tags.valuesIterator ++
+      partTags.valuesIterator.flatMap(_._2.valuesIterator)
 
   /** branch store key (`<tableKey>#b=<name>`) → the MAIN table's commit
     * count at fork time — the fast-forward fence: publish succeeds only
@@ -2773,8 +2784,9 @@ private[sources] class GraftDeltaScan(name: String, dataSchema: StructType,
     }
     GraftStore.skipLog.put(name,
       (snap.batches.size, snap.batches.size - kept.size))
-    kept.map(i => GraftDeltaPartition(snap.batches(i),
-      snap.readDvs.getOrElse(i, null), i): InputPartition).toArray
+    kept.zip(BatchBlocks.ship(kept.map(snap.batches))).map { case (i, b) =>
+      GraftDeltaPartition(b, snap.readDvs.getOrElse(i, null), i): InputPartition
+    }.toArray
   }
   override def createReaderFactory(): PartitionReaderFactory = {
     val snap0 = GraftStore.stores.get(name)
@@ -2784,7 +2796,7 @@ private[sources] class GraftDeltaScan(name: String, dataSchema: StructType,
       .getOrElse(new Array[Any](proj.length))
     (p: InputPartition) => new PartitionReader[InternalRow] {
       private val gp = p.asInstanceOf[GraftDeltaPartition]
-      private val rows = gp.rows
+      private val rows = gp.fetchRows()
       private val deleted =
         if (gp.dv == null) null else java.util.BitSet.valueOf(gp.dv)
       private val base = gp.batchIdx.toLong << 32
@@ -2810,14 +2822,15 @@ private[sources] class GraftDeltaScan(name: String, dataSchema: StructType,
   }
 }
 
-private[sources] case class GraftDeltaPartition(rows: Array[Array[Any]],
-    dv: Array[Long], batchIdx: Int) extends InputPartition
+private[sources] case class GraftDeltaPartition(block: BatchBlock,
+    dv: Array[Long], batchIdx: Int) extends BlockPartition
 
 /** Task-side delta writer + driver-side atomic row-delta commit: each
   * task buffers deleted positions and inserted rows (an UPDATE is both),
-  * ships them as its commit message, and the driver applies ALL
-  * messages in one [[GraftStore.commitDelta]] — the same 2PC as every
-  * other write, so an aborted MOR DML publishes nothing.
+  * ships them as its commit message (the rows as one block), and the
+  * driver applies ALL messages in one [[GraftStore.commitDelta]] — the
+  * same 2PC as every other write, so an aborted MOR DML publishes
+  * nothing.
   */
 private[sources] class GraftDeltaBatchWrite(name: String, rowSchema: StructType,
     expectSnapshot: () => Option[GraftStore.Committed] = () => None)
@@ -2828,65 +2841,94 @@ private[sources] class GraftDeltaBatchWrite(name: String, rowSchema: StructType,
     // batch write holds driver-side state and is not serializable)
     val s = rowSchema
     (_: Int, _: Long) => new DeltaWriter[InternalRow] {
-      private val dels = scala.collection.mutable.ArrayBuffer.empty[Long]
-      private val ins = scala.collection.mutable.ArrayBuffer.empty[Array[Any]]
-      // UPDATE ops keep their (old position → new row) pairing — the
-      // row lineage Delta CDF journals, so the change feed can render
-      // update_preimage/update_postimage instead of delete+insert
-      private val updDels = scala.collection.mutable.ArrayBuffer.empty[Long]
-      private val updIns = scala.collection.mutable.ArrayBuffer.empty[Array[Any]]
-      private def copyRow(r: InternalRow): Array[Any] = {
-        val vals = new Array[Any](s.length)
-        var i = 0
-        while (i < s.length) {
-          val v = r.get(i, s(i).dataType)
-          vals(i) = v match {
-            case u: org.apache.spark.unsafe.types.UTF8String => u.copy()
-            case a: org.apache.spark.sql.catalyst.util.ArrayData => a.copy()
-            case m: org.apache.spark.sql.catalyst.util.MapData => m.copy()
-            case row: InternalRow => row.copy()
-            case other => other
-          }
-          i += 1
-        }
-        vals
-      }
+      private val buf = new DeltaBuffer
+      private var shipped: Option[BatchBlock] = None
       override def delete(meta: InternalRow, id: InternalRow): Unit =
-        dels += id.getLong(0)
+        buf.deleted += id.getLong(0)
       override def update(meta: InternalRow, id: InternalRow,
-          row: InternalRow): Unit = {
-        updDels += id.getLong(0)
-        updIns += copyRow(row)
+          row: InternalRow): Unit =
+        buf.update(id.getLong(0), GraftStore.copyRow(row, s))
+      override def insert(row: InternalRow): Unit =
+        buf.insert(GraftStore.copyRow(row, s))
+      override def commit(): WriterCommitMessage = {
+        val d = buf.ship()
+        shipped = d.rows
+        GraftDeltaCommit(d)
       }
-      override def insert(row: InternalRow): Unit = ins += copyRow(row)
-      override def commit(): WriterCommitMessage =
-        GraftDeltaCommit(dels.toArray, ins.toArray,
-          updDels.toArray, updIns.toArray)
-      override def abort(): Unit =
-        { dels.clear(); ins.clear(); updDels.clear(); updIns.clear() }
+      override def abort(): Unit = BatchBlocks.discard(shipped)
       override def close(): Unit = ()
     }
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val ms = messages.map(_.asInstanceOf[GraftDeltaCommit])
-    // updated rows lead the appended batch so lineage indexes are the
-    // batch prefix; pure inserts follow
-    val updPairs = ms.flatMap(m => m.updatedDels.zip(m.updatedIns))
-    val deleted = ms.flatMap(_.deleted) ++ updPairs.map(_._1)
-    val inserted = (updPairs.map(_._2) ++ ms.flatMap(_.inserted)).toSeq
-    val lineage = updPairs.zipWithIndex.map { case ((pos, _), i) => (pos, i) }
-    if (deleted.nonEmpty || inserted.nonEmpty)
-      GraftStore.commitDelta(name, deleted, inserted, rowSchema, lineage,
-        expectSnapshot())
+    val ds = GraftDeltaCommit.deltas(messages)
+    GraftStore.stores.synchronized {
+      try {
+        val (deleted, inserted, lineage) = StoreDelta.merge(ds)
+        if (deleted.nonEmpty || inserted.nonEmpty)
+          GraftStore.commitDelta(name, deleted, inserted, rowSchema, lineage,
+            expectSnapshot())
+      } finally BatchBlocks.settle(ds.flatMap(_.rows), Nil)
+    }
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    BatchBlocks.discard(GraftDeltaCommit.deltas(messages).flatMap(_.rows))
 }
 
-private[sources] case class GraftDeltaCommit(deleted: Array[Long],
-    inserted: Array[Array[Any]], updatedDels: Array[Long],
-    updatedIns: Array[Array[Any]]) extends WriterCommitMessage
+private[sources] case class GraftDeltaCommit(delta: StoreDelta)
+    extends WriterCommitMessage
+
+private[sources] object GraftDeltaCommit {
+  def deltas(messages: Array[WriterCommitMessage]): Seq[StoreDelta] =
+    messages.toSeq.collect { case m: GraftDeltaCommit => m.delta }
+}
+
+/** One task's row delta against one store: `deleted` positions, then
+  * `updated` positions whose new rows lead the block `rows`, followed by
+  * the inserted rows (None = the task wrote no rows).
+  */
+private[sources] final case class StoreDelta(deleted: Array[Long],
+    updated: Array[Long], rows: Option[BatchBlock])
+
+private[sources] object StoreDelta {
+  /** The driver half, under the store lock: merge the tasks' deltas
+    * into one row-delta commit's (deleted, inserted, lineage). Updated
+    * rows lead the appended batch, so lineage indexes are the batch
+    * prefix; pure inserts follow.
+    */
+  def merge(ds: Seq[StoreDelta])
+      : (Array[Long], Seq[Array[Any]], Array[(Long, Int)]) = {
+    val rows = ds.map(_.rows.map(BatchBlocks.resolve)
+      .getOrElse(Array.empty[Array[Any]]))
+    val updPairs = ds.zip(rows).flatMap { case (d, r) => d.updated.zip(r) }
+    val deleted = (ds.flatMap(_.deleted) ++ updPairs.map(_._1)).toArray
+    val inserted = updPairs.map(_._2) ++
+      ds.zip(rows).flatMap { case (d, r) => r.drop(d.updated.length) }
+    val lineage = updPairs.zipWithIndex
+      .map { case ((pos, _), i) => (pos, i) }.toArray
+    (deleted, inserted, lineage)
+  }
+}
+
+/** A delta writer's buffer for one store. UPDATE ops keep their (old
+  * position → new row) pairing — the row lineage Delta CDF journals, so
+  * the change feed can render update_preimage/update_postimage instead
+  * of delete+insert.
+  */
+private[sources] final class DeltaBuffer {
+  val deleted = scala.collection.mutable.ArrayBuffer.empty[Long]
+  private val updated = scala.collection.mutable.ArrayBuffer.empty[Long]
+  private val rows = scala.collection.mutable.ArrayBuffer.empty[Array[Any]]
+  private val inserted = scala.collection.mutable.ArrayBuffer.empty[Array[Any]]
+  def update(pos: Long, row: Array[Any]): Unit = { updated += pos; rows += row }
+  def insert(row: Array[Any]): Unit = inserted += row
+  def ship(): StoreDelta = {
+    val all = (rows ++ inserted).toArray
+    StoreDelta(deleted.toArray, updated.toArray,
+      if (all.isEmpty) None else Some(BatchBlocks.put(all)))
+  }
+}
 
 /** A PARTITIONED catalog table whose partitions ARE the COW groups —
   * the real group-based model the unpartitioned table's whole-table
@@ -2923,7 +2965,6 @@ private[sources] class GraftPartitionedTable(
   // shards with the new id (ADVICE r17)
   private[sources] val loadSpecId: Int = GraftCatalog.currentSpecId(tableKey)
 
-  private def partCol: String = spec.sourceCol
   override def name(): String =
     s"graft_store($tableKey/${spec.transform.describe()})"
   override def constraints()
@@ -3527,7 +3568,7 @@ private[sources] class GraftPartsScan(
           GraftStore.composeProjection(snap, dataSchema, targetPad)
         // shard deletion vectors apply on every read path (partitioned
         // MOR DML marks rows here instead of rewriting the shard)
-        snap.batches.zipWithIndex.map { case (b, i) =>
+        BatchBlocks.ship(snap.batches).zipWithIndex.map { case (b, i) =>
           GraftGroupPartition(b, if (withGroup) v else null,
             snap.readDvs.getOrElse(i, null), i, proj, pad): InputPartition
         }
@@ -3549,6 +3590,7 @@ private[sources] object GraftPartsScan {
       withPos: Boolean): PartitionReaderFactory =
     (p: InputPartition) => new PartitionReader[InternalRow] {
       private val gp = p.asInstanceOf[GraftGroupPartition]
+      private val rows = gp.fetchRows()
       private val tag = Option(gp.group)
         .map(g => org.apache.spark.unsafe.types.UTF8String.fromString(g))
       private val deleted =
@@ -3560,11 +3602,11 @@ private[sources] object GraftPartsScan {
       override def next(): Boolean = {
         i += 1
         if (deleted != null)
-          while (i < gp.rows.length && deleted.get(i)) i += 1
-        i < gp.rows.length
+          while (i < rows.length && deleted.get(i)) i += 1
+        i < rows.length
       }
       override def get(): InternalRow = {
-        val r0 = gp.rows(i)
+        val r0 = rows(i)
         val out = new Array[Any](dataWidth + metaWidth)
         var j = 0
         while (j < dataWidth) {
@@ -3584,9 +3626,9 @@ private[sources] object GraftPartsScan {
 }
 
 private[sources] case class GraftGroupPartition(
-    rows: Array[Array[Any]], group: String, dv: Array[Long] = null,
+    block: BatchBlock, group: String, dv: Array[Long] = null,
     batchIdx: Int = 0, proj: Array[Int] = null, pad: Array[Any] = null)
-    extends InputPartition
+    extends BlockPartition
 
 /** Streaming READS from a PARTITIONED catalog table: offsets are
   * TABLE-LEVEL version ordinals into [[GraftCatalog.partVersions]], and
@@ -3672,7 +3714,8 @@ private[sources] class GraftPartsMicroBatchStream(tableKey: String,
                 // stayed `s.length` wide, and a mid-stream RENAME must
                 // keep serving the renamed slot under the stream's
                 // start-time name — slots are the stream's contract
-                c.batches.drop(p.batches.size).zipWithIndex.map {
+                BatchBlocks.ship(c.batches.drop(p.batches.size))
+                  .zipWithIndex.map {
                   case (bt, off) => GraftGroupPartition(bt, null, null,
                     p.batches.size + off, c.projection, c.logicalPad)
                       : InputPartition
@@ -3695,7 +3738,7 @@ private[sources] class GraftPartsMicroBatchStream(tableKey: String,
             // row-deleted on-branch (DVs or pending equality deletes),
             // and serving its batches raw would replay deleted rows as
             // inserts (ADVICE r17). readDvs composes eq-deletes in.
-            c.batches.zipWithIndex.map { case (bt, i) =>
+            BatchBlocks.ship(c.batches).zipWithIndex.map { case (bt, i) =>
               GraftGroupPartition(bt, null, c.readDvs.getOrElse(i, null),
                 i, c.projection, c.logicalPad): InputPartition
             }
@@ -3808,40 +3851,55 @@ private[sources] class GraftPartBatchWrite(
     (_: Int, _: Long) => GraftPartWriters.routingWriter(s, route, sid)
   }
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val byPart = GraftPartWriters.mergeByPart(messages)
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
     GraftStore.stores.synchronized {
-      // the captured (spec, specId) pair must still be coherent — a
-      // concurrent evolve_spec that moved the id out from under the
-      // load-time transform refuses here, like the snapshot checks
-      GraftCatalog.validateSpecCapture(tableKey, specId, spec)
-      // optimistic concurrency at shard grain: every shard this op
-      // scanned must still hold the snapshot it read (new shards a
-      // concurrent writer created are appends, not lost updates)
-      expectShards().foreach(_.foreach { case (k, snap) =>
-        GraftStore.validateSnapshot(k, snap)
-      })
-      if (!appendMode)
-        replaceKeys().foreach(GraftStore.drop)
-      byPart.foreach { case (pv, batches) =>
-        // dynamic overwrite: a TOUCHED shard's snapshot is replaced
-        // wholesale (truncate-publish = a first-class commit, its
-        // pre-backfill versions still time-travel); untouched shards
-        // are never visited
-        GraftStore.publish(s"$tableKey#p=$pv", schema, batches,
-          truncate = dynamicOverwrite)
-      }
-      // ONE table-level version per statement commit, however many
-      // shards it touched — the ledger VERSION AS OF resolves against
-      GraftCatalog.recordPartVersion(tableKey)
+      try commitShards(messages)
+      finally GraftPartWriters.settle(tableKey, messages)
     }
+
+  private def commitShards(messages: Array[WriterCommitMessage]): Unit = {
+    val byPart = GraftPartWriters.mergeByPart(messages)
+    // the captured (spec, specId) pair must still be coherent — a
+    // concurrent evolve_spec that moved the id out from under the
+    // load-time transform refuses here, like the snapshot checks
+    GraftCatalog.validateSpecCapture(tableKey, specId, spec)
+    // optimistic concurrency at shard grain: every shard this op
+    // scanned must still hold the snapshot it read (new shards a
+    // concurrent writer created are appends, not lost updates)
+    expectShards().foreach(_.foreach { case (k, snap) =>
+      GraftStore.validateSnapshot(k, snap)
+    })
+    if (!appendMode)
+      replaceKeys().foreach(GraftStore.drop)
+    byPart.foreach { case (pv, batches) =>
+      // dynamic overwrite: a TOUCHED shard's snapshot is replaced
+      // wholesale (truncate-publish = a first-class commit, its
+      // pre-backfill versions still time-travel); untouched shards
+      // are never visited
+      GraftStore.publish(s"$tableKey#p=$pv", schema, batches,
+        truncate = dynamicOverwrite)
+    }
+    // ONE table-level version per statement commit, however many
+    // shards it touched — the ledger VERSION AS OF resolves against
+    GraftCatalog.recordPartVersion(tableKey)
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    BatchBlocks.discard(GraftPartWriters.blocks(messages))
 }
 
-private[sources] case class GraftPartCommit(
-    parts: Map[String, Array[Array[Any]]]) extends WriterCommitMessage
+/** One task's rows per partition value, each shard's rows as one block. */
+private[sources] case class GraftPartCommit(blocks: Map[String, BatchBlock])
+    extends WriterCommitMessage
+
+private[sources] object GraftPartCommit {
+  /** A message for rows already in this JVM: each shard's rows are put
+    * as one block, exactly as a writer task's commit does.
+    */
+  def apply(parts: Map[String, Array[Array[Any]]])(
+      implicit d: DummyImplicit): GraftPartCommit =
+    GraftPartCommit(parts.map { case (k, rows) => k -> BatchBlocks.put(rows) })
+}
 
 /** The partition-routing writer and commit-side merge SHARED by the
   * batch ([[GraftPartBatchWrite]]) and streaming
@@ -3857,20 +3915,9 @@ private[sources] object GraftPartWriters {
     new DataWriter[InternalRow] {
       private val buf = scala.collection.mutable.Map
         .empty[String, scala.collection.mutable.ArrayBuffer[Array[Any]]]
+      private var shipped: Iterable[BatchBlock] = Nil
       override def write(r: InternalRow): Unit = {
-        val vals = new Array[Any](s.length)
-        var i = 0
-        while (i < s.length) {
-          val v = r.get(i, s(i).dataType)
-          vals(i) = v match {
-            case u: org.apache.spark.unsafe.types.UTF8String => u.copy()
-            case a: org.apache.spark.sql.catalyst.util.ArrayData => a.copy()
-            case m: org.apache.spark.sql.catalyst.util.MapData => m.copy()
-            case row: InternalRow => row.copy()
-            case other => other
-          }
-          i += 1
-        }
+        val vals = GraftStore.copyRow(r, s)
         // the TRANSFORM routes: identity keeps the raw value, days/
         // bucket derive the hidden partition value from the source col
         val pv = PartSpec.encodeSuffix(route.valueOf(vals(pIdx)), sid)
@@ -3878,21 +3925,43 @@ private[sources] object GraftPartWriters {
           scala.collection.mutable.ArrayBuffer.empty[Array[Any]]) += vals
         ()
       }
-      override def commit(): WriterCommitMessage =
-        GraftPartCommit(buf.map { case (k, v) => k -> v.toArray }.toMap)
-      override def abort(): Unit = buf.clear()
+      override def commit(): WriterCommitMessage = {
+        val m = GraftPartCommit(
+          buf.map { case (k, v) => k -> BatchBlocks.put(v.toArray) }.toMap)
+        shipped = m.blocks.values
+        m
+      }
+      override def abort(): Unit = { buf.clear(); BatchBlocks.discard(shipped) }
       override def close(): Unit = ()
     }
   }
 
+  /** Each shard's incoming batches, resolved from the messages' blocks
+    * — call under the store lock, then [[settle]].
+    */
   def mergeByPart(messages: Array[WriterCommitMessage])
       : Map[String, Seq[Array[Array[Any]]]] =
-    messages.map(_.asInstanceOf[GraftPartCommit].parts)
+    messages.toSeq.collect { case m: GraftPartCommit => m.blocks }
       .foldLeft(Map.empty[String, Seq[Array[Array[Any]]]]) { (acc, m) =>
-        m.foldLeft(acc) { case (a, (k, rows)) =>
-          a.updated(k, a.getOrElse(k, Seq.empty) :+ rows)
+        m.foldLeft(acc) { case (a, (k, b)) =>
+          a.updated(k, a.getOrElse(k, Seq.empty) :+ BatchBlocks.resolve(b))
         }
       }
+
+  def blocks(messages: Array[WriterCommitMessage]): Seq[BatchBlock] =
+    messages.toSeq.collect { case m: GraftPartCommit => m.blocks.values }
+      .flatten
+
+  /** After a commit (published, refused or replayed): keep the blocks
+    * that became batches of the touched shards, drop the rest.
+    */
+  def settle(tableKey: String, messages: Array[WriterCommitMessage]): Unit = {
+    val bs = blocks(messages)
+    val shards = messages.toSeq
+      .collect { case m: GraftPartCommit => m.blocks.keySet }.flatten.distinct
+      .flatMap(pv => GraftStore.stores.get(s"$tableKey#p=$pv"))
+    BatchBlocks.settle(bs, shards)
+  }
 }
 
 /** Streaming epochs into a PARTITIONED table: every micro-batch routes
@@ -3920,50 +3989,56 @@ private[sources] class GraftPartsStreamingWrite(tableKey: String,
   }
 
   override def commit(epochId: Long,
-      messages: Array[WriterCommitMessage]): Unit = {
-    val byPart = GraftPartWriters.mergeByPart(messages)
+      messages: Array[WriterCommitMessage]): Unit =
     GraftStore.stores.synchronized {
-      // exactly-once at (table, query) grain: the whole epoch lands or
-      // none of it — shard publishes and the ledger entry sit inside
-      // the same lock as the epoch check. Keyed PER QUERY because
-      // epochIds are only monotonic within one streaming query; a
-      // table-grained key would silently drop a second query's epochs
-      // (review r18)
-      val ek = if (queryId.isEmpty) tableKey else s"$tableKey#q=$queryId"
-      if (GraftStore.epochs.get(ek).exists(_ >= epochId)) return
-      GraftCatalog.validateSpecCapture(tableKey, specId, spec)
-      // the OPT-IN checkpoint-wipe idempotence tier, same contract as
-      // the flat sink ([[GraftStore.publishEpoch]]): fingerprint the
-      // WHOLE epoch's content (order-insensitive across rows, tasks
-      // AND shards) and suppress a new-queryId twin
-      val fpDedup = try org.apache.spark.sql.internal.SQLConf.get
-          .getConfString("spark.graft.stream.fingerprintDedup", "false")
-          .toBoolean
-        catch { case _: Exception => false }
-      val fp =
-        if (fpDedup && byPart.valuesIterator.exists(_.exists(_.nonEmpty)))
-          Some(GraftStore.fingerprintEpoch(schema,
-            byPart.valuesIterator.flatten.toSeq))
-        else None
-      if (fp.exists(GraftStore.epochFps
-          .getOrElse(tableKey, Set.empty).contains)) {
-        GraftStore.epochs.put(ek, epochId) // this query's ledger advances
-        return
-      }
-      byPart.foreach { case (pv, batches) =>
-        GraftStore.publish(s"$tableKey#p=$pv", schema, batches,
-          truncate = false)
-      }
-      GraftCatalog.recordPartVersion(tableKey)
-      fp.foreach(f => GraftStore.epochFps.put(tableKey,
-        GraftStore.epochFps.getOrElse(tableKey, Set.empty) + f))
-      GraftStore.epochs.put(ek, epochId)
-      ()
+      try commitEpoch(epochId, messages)
+      finally GraftPartWriters.settle(tableKey, messages)
     }
+
+  private def commitEpoch(epochId: Long,
+      messages: Array[WriterCommitMessage]): Unit = {
+    // exactly-once at (table, query) grain: the whole epoch lands or
+    // none of it — shard publishes and the ledger entry sit inside
+    // the same lock as the epoch check. Keyed PER QUERY because
+    // epochIds are only monotonic within one streaming query; a
+    // table-grained key would silently drop a second query's epochs
+    // (review r18)
+    val ek = if (queryId.isEmpty) tableKey else s"$tableKey#q=$queryId"
+    if (GraftStore.epochs.get(ek).exists(_ >= epochId)) return
+    GraftCatalog.validateSpecCapture(tableKey, specId, spec)
+    val byPart = GraftPartWriters.mergeByPart(messages)
+    // the OPT-IN checkpoint-wipe idempotence tier, same contract as
+    // the flat sink ([[GraftStore.publishEpoch]]): fingerprint the
+    // WHOLE epoch's content (order-insensitive across rows, tasks
+    // AND shards) and suppress a new-queryId twin
+    val fpDedup = try org.apache.spark.sql.internal.SQLConf.get
+        .getConfString("spark.graft.stream.fingerprintDedup", "false")
+        .toBoolean
+      catch { case _: Exception => false }
+    val fp =
+      if (fpDedup && byPart.valuesIterator.exists(_.exists(_.nonEmpty)))
+        Some(GraftStore.fingerprintEpoch(schema,
+          byPart.valuesIterator.flatten.toSeq))
+      else None
+    if (fp.exists(GraftStore.epochFps
+        .getOrElse(tableKey, Set.empty).contains)) {
+      GraftStore.epochs.put(ek, epochId) // this query's ledger advances
+      return
+    }
+    byPart.foreach { case (pv, batches) =>
+      GraftStore.publish(s"$tableKey#p=$pv", schema, batches,
+        truncate = false)
+    }
+    GraftCatalog.recordPartVersion(tableKey)
+    fp.foreach(f => GraftStore.epochFps.put(tableKey,
+      GraftStore.epochFps.getOrElse(tableKey, Set.empty) + f))
+    GraftStore.epochs.put(ek, epochId)
+    ()
   }
 
   override def abort(epochId: Long,
-      messages: Array[WriterCommitMessage]): Unit = ()
+      messages: Array[WriterCommitMessage]): Unit =
+    BatchBlocks.discard(GraftPartWriters.blocks(messages))
 }
 
 /** A read-only table over one ARCHIVED snapshot — what `VERSION AS OF`
@@ -3983,7 +4058,7 @@ private[sources] class GraftVersionTable(nm: String, snap: GraftStore.Committed)
         override def toBatch: Batch = this
         override def description(): String = s"graft_store($nm) snapshot scan"
         override def planInputPartitions(): Array[InputPartition] =
-          snap.batches.zipWithIndex.map { case (b, i) =>
+          BatchBlocks.ship(snap.batches).zipWithIndex.map { case (b, i) =>
             // the SNAPSHOT's own deletion vectors: a post-DV-delete
             // version hides exactly the rows deleted AS OF that commit,
             // a pre-delete version serves them all
@@ -4025,7 +4100,7 @@ private[sources] class GraftPartsDeltaScan(tableKey: String,
       // address), only the VALUES resolve logically
       val (proj, pad) =
         GraftStore.composeProjection(snap, dataSchema, targetPad)
-      snap.batches.zipWithIndex.map { case (b, i) =>
+      BatchBlocks.ship(snap.batches).zipWithIndex.map { case (b, i) =>
         GraftPartsDeltaPartition(b, snap.readDvs.getOrElse(i, null), i, pv,
           proj, pad): InputPartition
       }
@@ -4035,7 +4110,7 @@ private[sources] class GraftPartsDeltaScan(tableKey: String,
     val width = dataSchema.length
     (p: InputPartition) => new PartitionReader[InternalRow] {
       private val gp = p.asInstanceOf[GraftPartsDeltaPartition]
-      private val rows = gp.rows
+      private val rows = gp.fetchRows()
       private val deleted =
         if (gp.dv == null) null else java.util.BitSet.valueOf(gp.dv)
       private val base = gp.batchIdx.toLong << 32
@@ -4065,9 +4140,9 @@ private[sources] class GraftPartsDeltaScan(tableKey: String,
   }
 }
 
-private[sources] case class GraftPartsDeltaPartition(rows: Array[Array[Any]],
+private[sources] case class GraftPartsDeltaPartition(block: BatchBlock,
     dv: Array[Long], batchIdx: Int, group: String,
-    proj: Array[Int], pad: Array[Any]) extends InputPartition
+    proj: Array[Int], pad: Array[Any]) extends BlockPartition
 
 /** Task-side partitioned delta writer + driver-side atomic commit:
   * each task buckets deletes by OWNING shard (`_group` of the row id),
@@ -4101,120 +4176,89 @@ private[sources] class GraftPartsDeltaBatchWrite(tableKey: String,
     val pIdx = rowSchema.fieldNames
       .indexWhere(_.equalsIgnoreCase(spec.sourceCol))
     (_: Int, _: Long) => new DeltaWriter[InternalRow] {
-      private val dels = scala.collection.mutable.Map
-        .empty[String, scala.collection.mutable.ArrayBuffer[Long]]
-      private val ins = scala.collection.mutable.Map
-        .empty[String, scala.collection.mutable.ArrayBuffer[Array[Any]]]
-      private val upds = scala.collection.mutable.Map
-        .empty[String, scala.collection.mutable.ArrayBuffer[(Long, Array[Any])]]
-      private def copyRow(r: InternalRow): Array[Any] = {
-        val vals = new Array[Any](s.length)
-        var i = 0
-        while (i < s.length) {
-          val v = r.get(i, s(i).dataType)
-          vals(i) = v match {
-            case u: org.apache.spark.unsafe.types.UTF8String => u.copy()
-            case a: org.apache.spark.sql.catalyst.util.ArrayData => a.copy()
-            case m: org.apache.spark.sql.catalyst.util.MapData => m.copy()
-            case row: InternalRow => row.copy()
-            case other => other
-          }
-          i += 1
-        }
-        vals
-      }
-      private def bucketDel(g: String, pos: Long): Unit =
-        dels.getOrElseUpdate(g,
-          scala.collection.mutable.ArrayBuffer.empty[Long]) += pos
+      private val bufs = scala.collection.mutable.Map.empty[String, DeltaBuffer]
+      private var shipped: Iterable[BatchBlock] = Nil
+      private def buf(g: String): DeltaBuffer =
+        bufs.getOrElseUpdate(g, new DeltaBuffer)
       override def delete(meta: InternalRow, id: InternalRow): Unit =
-        bucketDel(id.getUTF8String(0).toString, id.getLong(1))
+        buf(id.getUTF8String(0).toString).deleted += id.getLong(1)
       override def update(meta: InternalRow, id: InternalRow,
           row: InternalRow): Unit = {
         val oldGroup = id.getUTF8String(0).toString
         val pos = id.getLong(1)
-        val vals = copyRow(row)
+        val vals = GraftStore.copyRow(row, s)
         val newGroup =
           PartSpec.encodeSuffix(route.valueOf(vals(pIdx)), sid)
-        if (newGroup == oldGroup)
-          upds.getOrElseUpdate(oldGroup, scala.collection.mutable
-            .ArrayBuffer.empty[(Long, Array[Any])]) += ((pos, vals))
+        if (newGroup == oldGroup) buf(oldGroup).update(pos, vals)
         else {
           // cross-shard move: honestly a delete + insert, no lineage
-          bucketDel(oldGroup, pos)
-          ins.getOrElseUpdate(newGroup, scala.collection.mutable
-            .ArrayBuffer.empty[Array[Any]]) += vals
+          buf(oldGroup).deleted += pos
+          buf(newGroup).insert(vals)
         }
       }
       override def insert(row: InternalRow): Unit = {
-        val vals = copyRow(row)
-        ins.getOrElseUpdate(
-          PartSpec.encodeSuffix(route.valueOf(vals(pIdx)), sid),
-          scala.collection.mutable.ArrayBuffer.empty[Array[Any]]) += vals
+        val vals = GraftStore.copyRow(row, s)
+        buf(PartSpec.encodeSuffix(route.valueOf(vals(pIdx)), sid)).insert(vals)
       }
-      override def commit(): WriterCommitMessage =
-        GraftPartsDeltaCommit(
-          dels.map { case (g, v) => g -> v.toArray }.toMap,
-          ins.map { case (g, v) => g -> v.toArray }.toMap,
-          upds.map { case (g, v) => g -> v.toArray }.toMap)
-      override def abort(): Unit = { dels.clear(); ins.clear(); upds.clear() }
+      override def commit(): WriterCommitMessage = {
+        val m = GraftPartsDeltaCommit(bufs.map { case (g, b) => g -> b.ship() }.toMap)
+        shipped = m.deltas.values.flatMap(_.rows)
+        m
+      }
+      override def abort(): Unit = BatchBlocks.discard(shipped)
       override def close(): Unit = ()
     }
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val ms = messages.map(_.asInstanceOf[GraftPartsDeltaCommit])
-    val groups = ms.iterator
-      .flatMap(m => m.dels.keysIterator ++ m.ins.keysIterator ++
-        m.upds.keysIterator)
-      .toSeq.distinct.sorted
+    val ms = messages.toSeq.collect { case m: GraftPartsDeltaCommit => m.deltas }
+    val groups = ms.flatMap(_.keys).distinct.sorted
     if (groups.isEmpty) return
     GraftStore.stores.synchronized {
-      // captured (spec, specId) coherence first (ADVICE r17) — a torn
-      // pair would tag delta-routed shards with a spec that didn't
-      // route them
-      GraftCatalog.validateSpecCapture(tableKey, specId, spec)
-      // optimistic concurrency: every shard this op's scan CAPTURED —
-      // modified or not — must still hold the snapshot the scan read.
-      // Delta positions address the modified shards' batches, but a
-      // MERGE's match/insert decisions also depend on rows read from
-      // shards the statement ended up not touching, so validating only
-      // modified shards would admit write skew the unpartitioned path's
-      // whole-snapshot check refuses. Partition-conjunct pruning keeps
-      // the scope shard-grained: a pruned shard was never captured, so
-      // disjoint-partition writers still don't conflict.
-      expectShards().foreach { m =>
-        m.foreach { case (k, snap) => GraftStore.validateSnapshot(k, snap) }
-      }
-      groups.foreach { pv =>
-        val k = s"$tableKey#p=$pv"
-        val updPairs = ms.flatMap(_.upds.getOrElse(pv, Array.empty))
-        val deleted = ms.flatMap(_.dels.getOrElse(pv, Array.empty)) ++
-          updPairs.map(_._1)
-        val inserted = (updPairs.map(_._2) ++
-          ms.flatMap(_.ins.getOrElse(pv, Array.empty))).toSeq
-        val lineage = updPairs.zipWithIndex
-          .map { case ((pos, _), i) => (pos, i) }
-        if (GraftStore.stores.contains(k))
-          GraftStore.commitDelta(k, deleted, inserted, rowSchema, lineage)
-        else {
-          require(deleted.isEmpty && lineage.isEmpty,
-            s"graft partitioned MOR: delete addressed to unknown shard '$pv'")
-          GraftStore.publish(k, rowSchema, Seq(inserted.toArray),
-            truncate = false)
+      try {
+        // captured (spec, specId) coherence first (ADVICE r17) — a torn
+        // pair would tag delta-routed shards with a spec that didn't
+        // route them
+        GraftCatalog.validateSpecCapture(tableKey, specId, spec)
+        // optimistic concurrency: every shard this op's scan CAPTURED —
+        // modified or not — must still hold the snapshot the scan read.
+        // Delta positions address the modified shards' batches, but a
+        // MERGE's match/insert decisions also depend on rows read from
+        // shards the statement ended up not touching, so validating only
+        // modified shards would admit write skew the unpartitioned path's
+        // whole-snapshot check refuses. Partition-conjunct pruning keeps
+        // the scope shard-grained: a pruned shard was never captured, so
+        // disjoint-partition writers still don't conflict.
+        expectShards().foreach { m =>
+          m.foreach { case (k, snap) => GraftStore.validateSnapshot(k, snap) }
         }
-      }
-      // ONE table-level version for the whole statement
-      GraftCatalog.recordPartVersion(tableKey)
+        groups.foreach { pv =>
+          val k = s"$tableKey#p=$pv"
+          val (deleted, inserted, lineage) =
+            StoreDelta.merge(ms.flatMap(_.get(pv)))
+          if (GraftStore.stores.contains(k))
+            GraftStore.commitDelta(k, deleted, inserted, rowSchema, lineage)
+          else {
+            require(deleted.isEmpty && lineage.isEmpty,
+              s"graft partitioned MOR: delete addressed to unknown shard '$pv'")
+            GraftStore.publish(k, rowSchema, Seq(inserted.toArray),
+              truncate = false)
+          }
+        }
+        // ONE table-level version for the whole statement
+        GraftCatalog.recordPartVersion(tableKey)
+      } finally BatchBlocks.settle(ms.flatMap(_.values.flatMap(_.rows)), Nil)
     }
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    BatchBlocks.discard(messages.toSeq
+      .collect { case m: GraftPartsDeltaCommit => m.deltas.values.flatMap(_.rows) }
+      .flatten)
 }
 
 private[sources] case class GraftPartsDeltaCommit(
-    dels: Map[String, Array[Long]],
-    ins: Map[String, Array[Array[Any]]],
-    upds: Map[String, Array[(Long, Array[Any])]]) extends WriterCommitMessage
+    deltas: Map[String, StoreDelta]) extends WriterCommitMessage
 
 /** A read-only PARTITIONED-table snapshot — what `VERSION AS OF n`
   * resolves to for a partitioned table: the table-level ledger entry's
@@ -4249,7 +4293,7 @@ private[sources] class GraftPartsVersionTable(nm: String,
           shards.toSeq.sortBy(_._1).flatMap { case (_, snap) =>
             val (proj, pad) =
               GraftStore.composeProjection(snap, sch, targetPad)
-            snap.batches.zipWithIndex.map { case (b, i) =>
+            BatchBlocks.ship(snap.batches).zipWithIndex.map { case (b, i) =>
               GraftGroupPartition(b, null, snap.readDvs.getOrElse(i, null),
                 i, proj, pad): InputPartition
             }
@@ -4280,7 +4324,7 @@ private[sources] class GraftGroupScan(name: String, dataSchema: StructType,
     // deletion vectors apply on the OPERATION scan too: a COW rewrite
     // reads only live rows, so a later UPDATE can never resurrect a
     // merge-on-read-deleted row
-    snap.batches.zipWithIndex.map { case (b, i) =>
+    BatchBlocks.ship(snap.batches).zipWithIndex.map { case (b, i) =>
       GraftStorePartition(b, snap.readDvs.getOrElse(i, null)): InputPartition
     }.toArray
   }
@@ -4295,7 +4339,7 @@ private[sources] class GraftGroupScan(name: String, dataSchema: StructType,
       .getOrElse(new Array[Any](proj.length))
     (p: InputPartition) => new PartitionReader[InternalRow] {
       private val gp = p.asInstanceOf[GraftStorePartition]
-      private val rows = gp.rows
+      private val rows = gp.fetchRows()
       private val deleted = gp.deleted
       private var i = -1
       override def next(): Boolean = {

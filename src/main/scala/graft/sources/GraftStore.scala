@@ -12,6 +12,7 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.storage.StreamBlockId
 
 /** The SINK half of the DataSource V2 connector surface (the read half —
   * scan, filter/column/aggregate pushdown, micro-batch streaming — is
@@ -19,24 +20,36 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * protocol Spark's V2 write path runs:
   *
   *   1. every task's [[DataWriter]] buffers its partition and, on task
-  *      commit, ships the rows as its [[WriterCommitMessage]] — nothing
-  *      is visible yet;
-  *   2. the driver's [[BatchWrite.commit]] publishes ALL messages in one
-  *      atomic registry swap — a failed/aborted job publishes NOTHING
-  *      ([[BatchWrite.abort]] simply never swaps), so readers can never
-  *      observe a torn write (spec-proven: a poisoned partition leaves
-  *      the store byte-identical).
+  *      commit, stores the rows as ONE BlockManager block in its own
+  *      executor; its [[WriterCommitMessage]] carries only the block id
+  *      and row count ([[BatchBlock]]) — nothing is visible yet;
+  *   2. the driver's [[BatchWrite.commit]] resolves every block (in
+  *      `local[N]` the very array the task buffered, no copy) and
+  *      publishes ALL messages in one atomic registry swap — a
+  *      failed/aborted job publishes NOTHING ([[BatchWrite.abort]] only
+  *      drops the committed tasks' blocks), so readers can never observe
+  *      a torn write (spec-proven: a poisoned partition leaves the store
+  *      byte-identical).
   *
   * Append and truncate-overwrite are both supported
   * ([[org.apache.spark.sql.connector.write.SupportsTruncate]] — Spark
   * plans `mode("overwrite")` on a path-less V2 table as truncate).
-  * The backing store is an in-JVM registry (the memory-sink convention —
-  * fixtures, not service plumbing); at 100 TB the identical protocol
+  *
+  * Where the rows live: the snapshot registry on the DRIVER
+  * ([[GraftStore.Committed]]`.batches`) is the source of truth. Each
+  * committed batch also has one BlockManager block ([[BatchBlocks]]) —
+  * its shipping copy for the current SparkContext, in `local[N]` the
+  * same object — so scan partitions carry block ids, never rows, and a
+  * reader fetches its batch from the BlockManager. A block is freed
+  * once no retained snapshot (a store head, its history, a partitioned
+  * ledger entry, a tag) references its batch: DROP, `expire_versions`
+  * and store evictions sweep. A batch without a live block (built on
+  * the driver by create, compaction or evolution; written under an
+  * earlier SparkContext; held by a lost executor) is put again from the
+  * driver rows when a scan is planned. At 100 TB the identical protocol
   * commits files to an object store + a transactional table format's
-  * log, and ONLY [[GraftStore.publish]]'s swap changes: task buffers
-  * become staged files, commit messages carry file manifests, the
-  * atomic swap is the metadata-log append. The protocol on the Spark
-  * side — which IS what this class exercises — is unchanged.
+  * log: blocks become staged files, the atomic swap is the
+  * metadata-log append.
   */
 class GraftStore extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
@@ -55,7 +68,12 @@ class GraftStore extends TableProvider {
 }
 
 object GraftStore {
-  /** One committed snapshot. `schema` is the LOGICAL schema readers see;
+  /** One committed snapshot, held on the driver. `batches` are the row
+    * arrays themselves (the source of truth); scans and writes ship them
+    * as BlockManager blocks ([[BatchBlocks]]), which share these arrays
+    * in `local[N]` — so no reader may write through a batch row. A
+    * batch's block lives while any retained snapshot references the
+    * batch. `schema` is the LOGICAL schema readers see;
     * rows are laid out in grow-only PHYSICAL slots and `proj` maps
     * logical field → physical slot (null = identity, the never-evolved
     * fast path). The slot model is the field-id contract of a real
@@ -319,7 +337,12 @@ object GraftStore {
     ()
   }
 
-  private[graft] def drop(name: String): Unit = {
+  private[graft] def drop(name: String): Unit = stores.synchronized {
+    dropOne(name)
+    sweepBlocks()
+  }
+
+  private def dropOne(name: String): Unit = {
     stores.remove(name); history.remove(name); epochs.remove(name)
     historyTimes.remove(name)
     // per-query epoch marks (`name#q=<queryId>`) — exact-or-`#`-prefixed
@@ -338,9 +361,41 @@ object GraftStore {
     * for the JVM lifetime.
     */
   private[graft] def dropExcept(prefix: String, keep: String): Unit =
-    stores.keys.filter(k => k.startsWith(prefix) && k != keep).foreach(drop)
+    dropMatching(k => k.startsWith(prefix) && k != keep)
+  /** Drop every store whose key matches, then free the blocks of the
+    * batches no retained snapshot references any more.
+    */
   private[graft] def dropMatching(p: String => Boolean): Unit =
-    stores.keys.filter(p).foreach(drop)
+    stores.synchronized {
+      stores.keys.filter(p).foreach(dropOne)
+      sweepBlocks()
+    }
+
+  /** Free the block of every batch that no retained snapshot references.
+    * Runs after every call that releases snapshots (drop, eviction,
+    * retention, tag removal).
+    */
+  private[sources] def sweepBlocks(): Unit = stores.synchronized {
+    BatchBlocks.sweep(retainedBatches())
+  }
+
+  /** Every batch a retained snapshot references, by identity: store
+    * heads, their histories, and the catalog's partitioned ledgers and
+    * tags.
+    */
+  private[sources] def retainedBatches(): java.util.Set[AnyRef] =
+    stores.synchronized {
+      val live = java.util.Collections.newSetFromMap(
+        new java.util.IdentityHashMap[AnyRef, java.lang.Boolean]())
+      val seen = java.util.Collections.newSetFromMap(
+        new java.util.IdentityHashMap[Committed, java.lang.Boolean]())
+      def pin(c: Committed): Unit =
+        if (c != null && seen.add(c)) c.batches.foreach(live.add)
+      stores.valuesIterator.foreach(pin)
+      history.valuesIterator.foreach(_.foreach(pin))
+      GraftCatalog.pinnedSnapshots.foreach(pin)
+      live
+    }
   private[graft] def rowCount(name: String): Long =
     stores.get(name).map(_.rowCount).getOrElse(0L)
   /** Test hook: the committed batch seq BY REFERENCE, so specs can prove
@@ -403,10 +458,12 @@ object GraftStore {
         throw new IllegalStateException(s"no store '$name' to expire"))
       val cut = math.max(0, hist.size - keepLast)
       val expired = hist.take(cut).count(_ != null)
-      if (expired > 0)
+      if (expired > 0) {
         history.put(name, hist.zipWithIndex.map { case (c, i) =>
           if (i < cut) null else c
         })
+        sweepBlocks()
+      }
       expired
     }
 
@@ -644,7 +701,7 @@ object GraftStore {
             out
           }.toArray)
       val stats = newBatch match {
-        case Some(b) =>
+        case Some(_) =>
           val st = StoreSkipping.computeStats(schema, inserted.toArray)
           // physical-slot-indexed like publish: scatter when evolved
           val scattered = if (identity) st else {
@@ -811,7 +868,7 @@ object GraftStore {
     val isIdentity = proj.indices.forall(j => proj(j) == j) && noPad
     (p: InputPartition) => new PartitionReader[InternalRow] {
       private val gp = p.asInstanceOf[GraftStorePartition]
-      private val rows = gp.rows
+      private val rows = gp.fetchRows()
       private val deleted = gp.deleted
       private var i = -1
       override def next(): Boolean = {
@@ -841,6 +898,30 @@ object GraftStore {
       }
       override def close(): Unit = ()
     }
+  }
+
+  /** Copy one incoming row's fields out for a writer buffer: every
+    * buffer-backed value (UTF8String, UnsafeArrayData/MapData, nested
+    * UnsafeRow) is a VIEW into the reused input row's transient bytes —
+    * copy each out, or the committed rows silently alias whatever the
+    * writer sees next (ADVICE r11). copy() on the unsafe variants
+    * duplicates the backing bytes; primitives/Decimal/CalendarInterval
+    * are safe.
+    */
+  private[sources] def copyRow(r: InternalRow, s: StructType): Array[Any] = {
+    val vals = new Array[Any](s.length)
+    var i = 0
+    while (i < s.length) {
+      vals(i) = r.get(i, s(i).dataType) match {
+        case u: org.apache.spark.unsafe.types.UTF8String => u.copy()
+        case a: org.apache.spark.sql.catalyst.util.ArrayData => a.copy()
+        case m: org.apache.spark.sql.catalyst.util.MapData => m.copy()
+        case row: InternalRow => row.copy()
+        case other => other
+      }
+      i += 1
+    }
+    vals
   }
 
   /** Per-field EXISTENCE-DEFAULT pad of a logical schema, resolved from
@@ -1188,28 +1269,7 @@ private[sources] class GraftStoreStreamingWrite(name: String,
       info: PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory = {
     val s = schema
-    (_: Int, _: Long, _: Long) => new DataWriter[InternalRow] {
-      private val buf = scala.collection.mutable.ArrayBuffer.empty[Array[Any]]
-      override def write(r: InternalRow): Unit = {
-        val vals = new Array[Any](s.length)
-        var i = 0
-        while (i < s.length) {
-          val v = r.get(i, s(i).dataType)
-          vals(i) = v match {
-            case u: org.apache.spark.unsafe.types.UTF8String => u.copy()
-            case a: org.apache.spark.sql.catalyst.util.ArrayData => a.copy()
-            case m: org.apache.spark.sql.catalyst.util.MapData => m.copy()
-            case row: InternalRow => row.copy()
-            case other => other
-          }
-          i += 1
-        }
-        buf += vals
-      }
-      override def commit(): WriterCommitMessage = GraftStoreCommit(buf.toArray)
-      override def abort(): Unit = buf.clear()
-      override def close(): Unit = ()
-    }
+    (_: Int, _: Long, _: Long) => new StoreRowWriter(s)
   }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
@@ -1219,13 +1279,41 @@ private[sources] class GraftStoreStreamingWrite(name: String,
         .getConfString("spark.graft.stream.fingerprintDedup", "false")
         .toBoolean
       catch { case _: Exception => false }
-    GraftStore.publishEpoch(name, schema,
-      messages.map(_.asInstanceOf[GraftStoreCommit].rows).toSeq, epochId,
-      queryId, fingerprintDedup = fpDedup)
+    val blocks = GraftStoreCommit.blocks(messages)
+    // a replayed (no-op) epoch publishes nothing, so settling drops
+    // its blocks
+    GraftStore.stores.synchronized {
+      try GraftStore.publishEpoch(name, schema,
+        blocks.map(BatchBlocks.resolve), epochId, queryId,
+        fingerprintDedup = fpDedup)
+      finally BatchBlocks.settle(blocks, GraftStore.stores.get(name))
+    }
     ()
   }
 
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
+  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+    BatchBlocks.discard(GraftStoreCommit.blocks(messages))
+}
+
+/** The DataWriter of every plain store write, batch and streaming: it
+  * buffers the task's rows and, on task commit, stores them as one
+  * block in this executor's BlockManager — the message carries only the
+  * block's id. An abort after that commit drops the block again.
+  */
+private[sources] final class StoreRowWriter(s: StructType)
+    extends DataWriter[InternalRow] {
+  private val buf = scala.collection.mutable.ArrayBuffer.empty[Array[Any]]
+  private var shipped: BatchBlock = null
+  override def write(r: InternalRow): Unit = buf += GraftStore.copyRow(r, s)
+  override def commit(): WriterCommitMessage = {
+    shipped = BatchBlocks.put(buf.toArray)
+    GraftStoreCommit(shipped)
+  }
+  override def abort(): Unit = {
+    buf.clear()
+    if (shipped != null) BatchBlocks.discard(Seq(shipped))
+  }
+  override def close(): Unit = ()
 }
 
 private[sources] class GraftStoreScan(name: String, val s: StructType,
@@ -1273,8 +1361,9 @@ private[sources] class GraftStoreScan(name: String, val s: StructType,
           if (i < snap.stats.length) snap.stats(i) else null, skipping)
     }
     GraftStore.skipLog.put(name, (snap.batches.size, snap.batches.size - kept.size))
-    kept.map(i => GraftStorePartition(snap.batches(i),
-      snap.readDvs.getOrElse(i, null)): InputPartition).toArray
+    kept.zip(BatchBlocks.ship(kept.map(snap.batches))).map { case (i, b) =>
+      GraftStorePartition(b, snap.readDvs.getOrElse(i, null)): InputPartition
+    }.toArray
   }
   override def createReaderFactory(): PartitionReaderFactory = {
     val snap = GraftStore.stores.get(name)
@@ -1348,13 +1437,13 @@ private[sources] class GraftStoreMicroBatchStream(name: String, s: StructType,
           s"reader (offset epoch ${a.truncEpoch}, store epoch " +
           s"${cur.truncCount}): streaming reads require append-only " +
           "commits - restart the query from a fresh checkpoint")
-    cur.batches.slice(a.batchCount, b.batchCount).zipWithIndex
-      .map { case (batch, i) =>
+    BatchBlocks.ship(cur.batches.slice(a.batchCount, b.batchCount))
+      .zipWithIndex.map { case (block, i) =>
         // a DV or equality delete bumps the truncation epoch (checked
         // above), so a batch served here can only carry deletes
         // committed BEFORE this stream started — apply the reader view
         // so a fresh reader never replays merge-on-read-deleted rows
-        GraftStorePartition(batch,
+        GraftStorePartition(block,
           cur.readDvs.getOrElse(a.batchCount + i, null)): InputPartition
       }.toArray
   }
@@ -1384,14 +1473,189 @@ private[sources] object GraftStreamOffset {
   }
 }
 
-/** One committed batch handed to a reader, plus the batch's deletion
-  * vector (null = none): every reader skips DV'd ordinals, so
-  * merge-on-read deletes are invisible on all read paths.
+/** One committed batch handed to a reader — by block, see
+  * [[BlockPartition]] — plus the batch's deletion vector (null = none):
+  * every reader skips DV'd ordinals, so merge-on-read deletes are
+  * invisible on all read paths.
   */
-private[sources] case class GraftStorePartition(rows: Array[Array[Any]],
-    dv: Array[Long] = null) extends InputPartition {
+private[sources] case class GraftStorePartition(block: BatchBlock,
+    dv: Array[Long] = null) extends BlockPartition {
   def deleted: java.util.BitSet =
     if (dv == null) null else java.util.BitSet.valueOf(dv)
+}
+
+/** A scan partition over one committed batch. It carries the batch's
+  * block, never its rows: the reader fetches them from the BlockManager
+  * ([[fetchRows]], once per reader). In `local[N]` that returns the very
+  * arrays the snapshot holds, so readers must never write through them.
+  */
+private[sources] trait BlockPartition extends InputPartition {
+  def block: BatchBlock
+  def fetchRows(): Array[Array[Any]] = BatchBlocks.fetch(block)
+  override def preferredLocations(): Array[String] =
+    if (block.host == null) Array.empty else Array(block.host)
+}
+
+/** A batch's handle on the wire: the BlockManager block holding its
+  * rows, the row count and the host holding the block. Commit messages
+  * and scan partitions carry this instead of the rows.
+  */
+private[sources] final case class BatchBlock(id: StreamBlockId, rows: Int,
+    host: String)
+
+/** Committed batches as BlockManager blocks. Writer tasks [[put]] their
+  * rows in their own executor's BlockManager; the driver [[resolve]]s a
+  * commit's blocks (the same arrays in `local[N]`) and keeps a registry
+  * from batch array (by identity) to block, so every later scan ships
+  * the batch as its block id ([[ship]]). The registry holds entries of
+  * the live SparkContext only: a batch whose block is gone — built on
+  * the driver, written under a stopped context, held by a lost executor
+  * — is put again from the driver rows at its next scan.
+  *
+  * Freeing: a commit [[settle]]s its blocks (those that did not become a
+  * batch of the published snapshot are dropped at once), an abort
+  * [[discard]]s them, and [[GraftStore.sweepBlocks]] drops every block
+  * whose batch no retained snapshot references.
+  */
+private[sources] object BatchBlocks {
+  import org.apache.spark.storage.graftbridge.BlockBridge
+
+  /** `StreamBlockId`'s stream id reserved for graft batches ("graf"):
+    * receivers number their streams up from 0, and `BlockId.apply`
+    * parses only non-negative ids.
+    */
+  val StreamId: Int = 0x67726166
+
+  def isGraft(id: org.apache.spark.storage.BlockId): Boolean = id match {
+    case StreamBlockId(StreamId, _) => true
+    case _ => false
+  }
+
+  private final class Entry(val rows: Array[Array[Any]],
+      val id: StreamBlockId, env: AnyRef) {
+    private val owner = new java.lang.ref.WeakReference(env)
+    /** set from [[resolve]] until [[settle]]: a commit in flight */
+    var pending = false
+    def current(live: AnyRef): Boolean = live != null && (owner.get eq live)
+  }
+  private val byRows =
+    new java.util.IdentityHashMap[Array[Array[Any]], Entry]()
+  private val byId = new java.util.HashMap[StreamBlockId, Entry]()
+  private val driverSeq = new java.util.concurrent.atomic.AtomicLong()
+  private val taskSeq = new java.util.concurrent.atomic.AtomicLong()
+
+  /** A fresh id, unique within a SparkContext without coordination:
+    * task puts are keyed by the task attempt id, driver puts count in a
+    * disjoint range (bit 62).
+    */
+  private def nextId(): StreamBlockId = {
+    val tc = org.apache.spark.TaskContext.get()
+    StreamBlockId(StreamId,
+      if (tc == null) (1L << 62) | driverSeq.getAndIncrement()
+      else (tc.taskAttemptId() << 20) | (taskSeq.getAndIncrement() & 0xFFFFF))
+  }
+
+  /** Store `rows` as a new block in this JVM's BlockManager. */
+  def put(rows: Array[Array[Any]]): BatchBlock = {
+    val id = nextId()
+    BatchBlock(id, rows.length, BlockBridge.put(id, rows))
+  }
+
+  /** The rows of a block: shared with the snapshot, never write to them. */
+  def fetch(b: BatchBlock): Array[Array[Any]] =
+    BlockBridge.get(b.id).getOrElse(throw new IllegalStateException(
+      s"graft batch block ${b.id} is gone — its snapshot was expired or " +
+        "dropped while this scan ran, or the executor holding it was " +
+        "lost; re-run the query")).asInstanceOf[Array[Array[Any]]]
+
+  /** Driver, under the store lock: a commit message's rows, registered
+    * as the block of that (future) batch until the commit [[settle]]s.
+    */
+  def resolve(b: BatchBlock): Array[Array[Any]] = {
+    val rows = fetch(b)
+    synchronized { register(rows, b.id).pending = true }
+    rows
+  }
+
+  private def register(rows: Array[Array[Any]], id: StreamBlockId): Entry = {
+    val e = new Entry(rows, id, BlockBridge.env)
+    forget(byRows.get(rows))
+    forget(byId.get(id))
+    byRows.put(rows, e)
+    byId.put(id, e)
+    e
+  }
+
+  private def forget(e: Entry): Unit = if (e != null) {
+    if (byRows.get(e.rows) eq e) byRows.remove(e.rows)
+    if (byId.get(e.id) eq e) byId.remove(e.id)
+  }
+
+  /** Driver: the blocks of `batches`, for one scan's partitions. A batch
+    * without a live block of the current SparkContext is put now.
+    */
+  def ship(batches: Seq[Array[Array[Any]]]): Seq[BatchBlock] = synchronized {
+    val env = BlockBridge.env
+    val known = batches.flatMap(b => Option(byRows.get(b)))
+      .filter(_.current(env)).map(_.id).distinct
+    val hosts = scala.collection.mutable.Map.empty[StreamBlockId, String]
+    known.zip(BlockBridge.hosts(known)).foreach { case (id, hs) =>
+      hs.headOption.foreach(hosts.put(id, _))
+    }
+    batches.map { rows =>
+      val e = byRows.get(rows)
+      if (e != null && e.current(env) && hosts.contains(e.id))
+        BatchBlock(e.id, rows.length, hosts(e.id))
+      else {
+        val b = put(rows)
+        register(rows, b.id)
+        hosts.put(b.id, b.host)
+        b
+      }
+    }
+  }
+
+  /** Driver, after a commit published (or refused): drop the blocks
+    * whose rows did not become a batch of `kept` — a replayed epoch, a
+    * delta's merged batch, an append remapped to evolved slots.
+    */
+  def settle(blocks: Iterable[BatchBlock],
+      kept: Iterable[GraftStore.Committed]): Unit = synchronized {
+    val live = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean]())
+    kept.foreach(_.batches.foreach(live.add))
+    blocks.foreach { b =>
+      val e = byId.get(b.id)
+      if (e != null && live.contains(e.rows)) e.pending = false
+      else dropBlock(b.id)
+    }
+  }
+
+  /** Drop blocks whose commit will never publish (task and job abort). */
+  def discard(blocks: Iterable[BatchBlock]): Unit = settle(blocks, Nil)
+
+  private def dropBlock(id: StreamBlockId): Unit = {
+    forget(byId.get(id))
+    BlockBridge.remove(id)
+  }
+
+  /** Drop the block of every registered batch not in `live` (by
+    * identity) and forget the entries of a stopped SparkContext — their
+    * blocks went with it.
+    */
+  def sweep(live: java.util.Set[AnyRef]): Unit = synchronized {
+    val env = BlockBridge.env
+    new java.util.ArrayList(byId.values).forEach { e =>
+      if (!e.current(env)) forget(e)
+      else if (!e.pending && !live.contains(e.rows)) dropBlock(e.id)
+    }
+  }
+
+  /** Test hook: the live context's block id for a batch, if any. */
+  private[graft] def idOf(rows: Array[Array[Any]]): Option[StreamBlockId] =
+    synchronized {
+      Option(byRows.get(rows)).filter(_.current(BlockBridge.env)).map(_.id)
+    }
 }
 
 private[sources] class GraftStoreWriteBuilder(name: String, schema: StructType,
@@ -1416,8 +1680,14 @@ private[sources] class GraftStoreWriteBuilder(name: String, schema: StructType,
   }
 }
 
-private[sources] case class GraftStoreCommit(rows: Array[Array[Any]])
+private[sources] case class GraftStoreCommit(block: BatchBlock)
     extends WriterCommitMessage
+
+private[sources] object GraftStoreCommit {
+  /** The blocks of a write's messages (a failed task leaves null). */
+  def blocks(messages: Array[WriterCommitMessage]): Seq[BatchBlock] =
+    messages.toSeq.collect { case m: GraftStoreCommit => m.block }
+}
 
 private[sources] class GraftStoreBatchWrite(
     name: String, schema: StructType, truncate: Boolean,
@@ -1425,42 +1695,20 @@ private[sources] class GraftStoreBatchWrite(
     extends BatchWrite {
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     val s = schema
-    (_: Int, _: Long) => new DataWriter[InternalRow] {
-      private val buf = scala.collection.mutable.ArrayBuffer.empty[Array[Any]]
-      override def write(r: InternalRow): Unit = {
-        val vals = new Array[Any](s.length)
-        var i = 0
-        while (i < s.length) {
-          // materialize per-field: every buffer-backed value (UTF8String,
-          // UnsafeArrayData/MapData, nested UnsafeRow) is a VIEW into the
-          // reused input row's transient bytes — copy each out, or the
-          // committed rows silently alias whatever the writer sees next
-          // (ADVICE r11). copy() on the unsafe variants duplicates the
-          // backing bytes; primitives/Decimal/CalendarInterval are safe.
-          val v = r.get(i, s(i).dataType)
-          vals(i) = v match {
-            case u: org.apache.spark.unsafe.types.UTF8String => u.copy()
-            case a: org.apache.spark.sql.catalyst.util.ArrayData => a.copy()
-            case m: org.apache.spark.sql.catalyst.util.MapData => m.copy()
-            case row: InternalRow => row.copy()
-            case other => other
-          }
-          i += 1
-        }
-        buf += vals
-      }
-      override def commit(): WriterCommitMessage = GraftStoreCommit(buf.toArray)
-      override def abort(): Unit = buf.clear()
-      override def close(): Unit = ()
+    (_: Int, _: Long) => new StoreRowWriter(s)
+  }
+
+  override def commit(messages: Array[WriterCommitMessage]): Unit = {
+    val blocks = GraftStoreCommit.blocks(messages)
+    GraftStore.stores.synchronized {
+      try GraftStore.publish(name, schema, blocks.map(BatchBlocks.resolve),
+        truncate, expectSnapshot())
+      finally BatchBlocks.settle(blocks, GraftStore.stores.get(name))
     }
   }
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit =
-    GraftStore.publish(name, schema,
-      messages.map(_.asInstanceOf[GraftStoreCommit].rows).toSeq, truncate,
-      expectSnapshot())
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    BatchBlocks.discard(GraftStoreCommit.blocks(messages))
 }
 
 /** Per-batch column statistics, computed once at COMMIT time (the parquet

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.functions._
-
 /** Dev probe: phase timing inside sim_pq_topk (VERDICT r12 #1). */
 object PqPhaseProbe {
   def main(args: Array[String]): Unit = {

@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.functions._
 object PqProbe {
   def main(args: Array[String]): Unit = {
     val spark = graft.engine.Sessions.local("pq", 8)

@@ -192,6 +192,29 @@ class AnalyticsAdditionsSpec extends SparkSpec {
     assert(got == expected)
   }
 
+  test("graph_kcore destroys every alive-set broadcast it makes") {
+    import org.apache.spark.storage.BroadcastBlockId
+    import org.apache.spark.storage.graftbridge.BlockBridge
+    // the peel's broadcasts hold the sorted alive set (a long[]); the
+    // task-binary broadcasts every job makes are freed by the context
+    // cleaner on GC, so they are not counted here
+    def aliveSets(): Int =
+      BlockBridge.matching {
+        case BroadcastBlockId(_, "") => true
+        case _ => false
+      }.count(id => BlockBridge.get(id).exists(_.isInstanceOf[Array[Long]]))
+    GraphOps.kCore(spark, sfDir).collect()
+    val before = aliveSets()
+    GraphOps.kCore(spark, sfDir).collect()
+    GraphOps.kCore(spark, sfDir).collect()
+    // destroy() removes the blocks asynchronously
+    org.scalatest.concurrent.Eventually.eventually(
+      org.scalatest.concurrent.Eventually.timeout(
+        org.scalatest.time.Span(20, org.scalatest.time.Seconds))) {
+      assert(aliveSets() === before)
+    }
+  }
+
   test("ldiversity_audit digest matches a driver recomputation") {
     val rows = Tables.customer(spark, sfDir)
       .select(col("c_mktsegment"), col("c_nationkey"), col("c_acctbal"))
@@ -220,7 +243,7 @@ class AnalyticsAdditionsSpec extends SparkSpec {
     val expected = bigrams.filter(b => top5(b._2))
       .groupBy(identity).view.mapValues(_.length.toLong).toSeq
       .map { case ((id, p), n) => (p, id, n) }
-      .groupBy(_._1).toSeq.flatMap { case (p, rows) =>
+      .groupBy(_._1).toSeq.flatMap { case (_, rows) =>
         rows.sortBy { case (_, id, n) => (-n, id) }.take(3).zipWithIndex
           .map { case ((ph, id, n), i) => (ph, (i + 1).toLong, id, n) }
       }.sortBy { case (p, r, _, _) => (p, r) }

@@ -48,7 +48,8 @@ class ClusterTuningSpec extends AnyFunSuite {
   test("parallelism sizing (r21): local scan floor is the measured 8, cluster floor is total cores") {
     // local: core-derived scan splits shred page-cached fixture files
     // into ~350 KB tasks at local[32] (measured: full suite 261→225 s
-    // with the floor at 8); the knob is env-overridable for A/Bs
+    // with the floor at 8). These are the pure defaults: the builders
+    // pass the GRAFT_* overrides in, the maps never read the env
     val local = Sessions.tuneConf("32")
     assert(local("spark.sql.files.minPartitionNum") == "8")
     assert(local("spark.sql.adaptive.coalescePartitions.parallelismFirst") == "true")
@@ -57,6 +58,24 @@ class ClusterTuningSpec extends AnyFunSuite {
     // volume the byte-derived split count dominates any floor
     val o = Sessions.clusterConf(executors = 10, coresPerExecutor = 4)
     assert(o("spark.sql.files.minPartitionNum") == "40")
+  }
+
+  test("GRAFT_* overrides are an input: applied last to the local and cluster maps alike") {
+    val ov = Sessions.envOverrides(Map(
+      "GRAFT_SCAN_MIN_PARTITIONS" -> "16",
+      "GRAFT_AQE_PARALLELISM_FIRST" -> "false",
+      "UNRELATED" -> "x"))
+    assert(ov == Map(
+      "spark.sql.files.minPartitionNum" -> "16",
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false"))
+    val local = Sessions.tuneConf("32", ov)
+    assert(local("spark.sql.files.minPartitionNum") == "16")
+    assert(local("spark.sql.adaptive.coalescePartitions.parallelismFirst") == "false")
+    assert(local("spark.sql.adaptive.coalescePartitions.minPartitionSize") == "1m")
+    // the cluster map's own scan floor must not shadow an override
+    val cluster = Sessions.clusterConf(executors = 10, overrides = ov)
+    assert(cluster("spark.sql.files.minPartitionNum") == "16")
+    assert(Sessions.envOverrides(Map.empty).isEmpty)
   }
 
   test("streaming state sizing: light state keeps the on-heap provider and core floor") {

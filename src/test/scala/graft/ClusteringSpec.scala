@@ -168,7 +168,7 @@ class ClusteringSpec extends SparkSpec {
   test("coreset_kcenter equals the brute greedy farthest-point traversal") {
     val vecs = normalizedQuantized()
     val k = 16
-    var chosen = List(vecs.keys.min)
+    val chosen = List(vecs.keys.min)
     val mind = scala.collection.mutable.Map.empty[Long, Double]
     vecs.keys.foreach { id =>
       mind(id) = 1.0 - vecs(chosen.head).zip(vecs(id)).map { case (a, b) => a * b }.sum

@@ -263,8 +263,12 @@ object ConcurrencyGates {
     val tc = org.apache.spark.TaskContext.get()
     val stage = if (tc == null) -1 else tc.stageId()
     if (parkedStages.add(stage)) {
+      // read the resume latch BEFORE signalling: the woken test thread
+      // may re-arm() before this thread runs on, and parking on the
+      // fresh latch would never be released
+      val r = resume
       started.countDown()
-      resume.await(60, TimeUnit.SECONDS)
+      r.await(60, TimeUnit.SECONDS)
       ()
     }
     k

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.Dedup
 
 /** The RDD label-propagation kernel vs a driver-side union-find reference

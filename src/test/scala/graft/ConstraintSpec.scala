@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.engine.Tables
-
 /** ANSI table constraints on catalog tables (Spark 4's SPARK-51207
   * framework): the catalog stores and serves them; CHECK enforcement on
   * every write path is Spark's own `ResolveTableConstraints`, so a

@@ -210,7 +210,6 @@ class DedupSimilaritySpec extends SparkSpec {
       }
     }
     // brute recompute for one anchor: top negative must match
-    import org.apache.spark.sql.functions._
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet").collect()
       .map(r => (r.getLong(0), r.getInt(2),
         r.getSeq[Float](1).map(_.toDouble).toArray))

@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.DeflateLen
-
 /** The deflate-length kernel: agreement with a fresh per-string Deflater
   * (catches state leakage through the thread-local reuse), the
   * quality-signal ordering the ratio exists for, and codegen integrity.

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop}
 
 /** ScalaCheck properties for the `t@files` batch inventory: under random

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.FuzzyMatch
 
 /** The prefix-filtered fuzzy join must equal the brute-force all-pairs

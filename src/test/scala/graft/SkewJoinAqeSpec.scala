@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** AQE skew-join handling is the engine's answer for hot-key JOINs at
   * 100 TB (salting covers the aggregation case — `SkewSaltingSpec`).
   * This pins that the runtime re-plan actually engages: with thresholds

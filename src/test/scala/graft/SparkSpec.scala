@@ -45,5 +45,14 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = graft.engine.Sessions.local("graft-test", 4)
+  private var current: SparkSession = _
+
+  /** The shared session, rebuilt when a suite stopped its SparkContext
+    * (the block-lifecycle specs run a table across a restart).
+    */
+  def session: SparkSession = synchronized {
+    if (current == null || current.sparkContext.isStopped)
+      current = graft.engine.Sessions.local("graft-test", 4)
+    current
+  }
 }

@@ -40,7 +40,6 @@ class StreamingSpec extends SparkSpec {
     assert(diff.isEmpty)
 
     // second AvailableNow pass with no new files: checkpoint short-circuits
-    val before = store.latestVersion
     StreamingPipeline.runAvailableNow(spark, ev.schema, s"$inDir/*", store, ckpt)
     assert(store.launches.get.count() === ev.count())
   }
